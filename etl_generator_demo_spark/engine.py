@@ -17,14 +17,13 @@ from __future__ import annotations
 
 import datetime as _dt
 import decimal as _decimal
-import re as _re
 from dataclasses import dataclass, field
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_generator_demo_spark.plans.limits import apply_auto_limit
-from etl_generator_demo_spark.plans.safety import validate_sql_safety
+from etl_generator_demo_spark.plans.safety import SafetyVerdict, validate_sql_safety
 
 #: API default result limit (reference ``main.py:65``); UI uses 50
 #: (``static/js/app.js:495``).
@@ -95,41 +94,44 @@ class ExecutionEngine:
         self.allow_writes = allow_writes
         self.catalog = catalog
 
+    def _admit(self, sql: str) -> tuple[str, SafetyVerdict]:
+        """Strip the statement and run the safety gate on it; a blocked
+        statement raises :class:`BlockedStatementError`."""
+        sql = (sql or "").strip().rstrip(";")
+        verdict = validate_sql_safety(sql, self.allow_writes)
+        if verdict.is_blocked:
+            raise BlockedStatementError(verdict.block_reason)
+        return sql, verdict
+
+    def _plan(self, sql: str, verdict: SafetyVerdict, limit: int | None) -> DataFrame:
+        df = self.spark.sql(sql)
+        if not verdict.is_write and limit:
+            df = apply_auto_limit(df, limit)
+        return df
+
     def dataframe(self, sql: str, limit: int | None = DEFAULT_LIMIT) -> DataFrame:
         """Parse + analyze + auto-limit, returning the lazy DataFrame.
 
         The gate runs BEFORE ``spark.sql``: Spark executes command
         statements (DROP/CREATE/INSERT/SET …) eagerly inside
         ``spark.sql`` itself, so parsing first would already have run
-        the write. Both front doors — this one and ``execute`` —
-        apply the same verdict; an inconsistent front door is how
-        gates get bypassed."""
-        sql = (sql or "").strip().rstrip(";")
-        verdict = validate_sql_safety(sql, self.allow_writes)
-        if verdict.is_blocked:
-            raise BlockedStatementError(verdict.block_reason)
-        df = self.spark.sql(sql)
-        if not verdict.is_write and limit:
-            df = apply_auto_limit(df, limit)
-        return df
+        the write. Every front door — this one, ``execute`` and the
+        ETL SQL extract — takes this one path; an inconsistent front
+        door is how gates get bypassed."""
+        return self._plan(*self._admit(sql), limit)
 
     def execute(self, sql: str, limit: int | None = DEFAULT_LIMIT) -> ExecutionResult:
         """Run a statement and serialize rows, reference-E2 style."""
-        sql = (sql or "").strip().rstrip(";")
-        verdict = validate_sql_safety(sql, self.allow_writes)
-        if verdict.is_blocked:
+        try:
+            sql, verdict = self._admit(sql)
+        except BlockedStatementError as exc:
             return ExecutionResult(
-                success=False,
-                error=verdict.block_reason,
-                is_blocked=True,
-                block_reason=verdict.block_reason,
+                success=False, error=str(exc), is_blocked=True, block_reason=str(exc)
             )
-        if verdict.is_write and _leads_with_merge(sql):
+        if verdict.is_write and verdict.keyword == "MERGE":
             return self._execute_merge(sql)
         try:
-            df = self.spark.sql(sql)
-            if not verdict.is_write and limit:
-                df = apply_auto_limit(df, limit)
+            df = self._plan(sql, verdict, limit)
             collected = df.collect()
         except Exception as exc:  # parse/analysis/runtime errors -> error envelope
             return ExecutionResult(success=False, error=str(exc)[:2000])
@@ -197,8 +199,3 @@ class ExecutionEngine:
             row_count=n_updated + n_inserted,
         )
 
-
-def _leads_with_merge(sql: str) -> bool:
-    from etl_generator_demo_spark.plans.safety import _strip_comments
-
-    return bool(_re.match(r"\s*MERGE\b", _strip_comments(sql or ""), _re.I))

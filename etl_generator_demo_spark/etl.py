@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_generator_demo_spark.catalog import Catalog
+from etl_generator_demo_spark.engine import BlockedStatementError, ExecutionEngine
+from etl_generator_demo_spark.sources.mutations import match
 
 
 class ETLSpecError(ValueError):
@@ -62,17 +64,13 @@ class ETLPipelineExecutor:
     def _extract(self, spec: dict[str, Any]) -> DataFrame:
         ex = spec.get("extract") or {}
         if "sql" in ex:
-            # same read-only gate as the engine front doors: a
-            # generated spec must not smuggle DDL/DML through the
+            # the engine's read-only front door, without its auto-LIMIT:
+            # a generated spec must not smuggle DDL/DML through the
             # eagerly-executing spark.sql (CTE-DML included)
-            from etl_generator_demo_spark.plans.safety import validate_sql_safety
-
-            verdict = validate_sql_safety(ex["sql"])
-            if verdict.is_blocked:
-                raise ETLSpecError(
-                    f"extract.sql blocked: {verdict.block_reason}"
-                )
-            df = self.spark.sql(ex["sql"])
+            try:
+                df = ExecutionEngine(self.spark).dataframe(ex["sql"], limit=None)
+            except BlockedStatementError as exc:
+                raise ETLSpecError(f"extract.sql blocked: {exc}") from None
         else:
             tables = ex.get("source_tables") or []
             if not tables:
@@ -130,7 +128,7 @@ class ETLPipelineExecutor:
             # NULL predicate = violation: an expectation holds only
             # where the condition is TRUE (plain ~cond drops NULL rows
             # from the count and lets them through the gate)
-            n_bad = df.filter(~F.coalesce(F.expr(cond), F.lit(False))).count()
+            n_bad = df.filter(~match(cond)).count()
             if n_bad > budget:
                 raise ETLSpecError(
                     f"expectation failed: {n_bad} rows violate {cond!r} "
@@ -238,27 +236,14 @@ class ETLPipelineExecutor:
         fmt = load.get("format", "parquet")
         if fmt not in ("parquet", "csv", "json", "orc"):
             raise ETLSpecError(f"format must be parquet|csv|json|orc, got {fmt!r}")
-        if fmt == "csv":
-            writer.option("header", "true").csv(path)
-        elif fmt == "json":
-            writer.json(path)
-        elif fmt == "orc":
-            # columnar alternative with the same pushdown/pruning
-            # story as parquet (Spark-native, no extra package)
-            writer.orc(path)
-        else:
-            writer.parquet(path)
+        # one writer and one reader for every format (orc: columnar, the
+        # same pushdown/pruning story as parquet, Spark-native); CSV
+        # carries a header and re-infers its types on read
+        is_csv = fmt == "csv"
+        writer.format(fmt).options(**({"header": "true"} if is_csv else {})).save(path)
         n_written = int(obs.get["rows"])
-        if fmt == "csv":
-            written = self.spark.read.option("header", "true").option(
-                "inferSchema", "true"
-            ).csv(path)
-        elif fmt == "json":
-            written = self.spark.read.json(path)
-        elif fmt == "orc":
-            written = self.spark.read.orc(path)
-        else:
-            written = self.spark.read.parquet(path)
+        read_opts = {"header": "true", "inferSchema": "true"} if is_csv else {}
+        written = self.spark.read.format(fmt).options(**read_opts).load(path)
         written.createOrReplaceTempView(target)
         return ETLResult(
             target_table=target,

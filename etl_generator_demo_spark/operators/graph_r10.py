@@ -178,7 +178,9 @@ def g_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("score").cast("long").alias("raw"))
             .localCheckpoint(eager=True)
         )
-        a_tot = ar.agg(F.sum("raw").cast("long")).first()[0]
+        # SUM over an empty relation is NULL (a non-empty one is
+        # positive); with no row to divide, any divisor serves
+        a_tot = ar.agg(F.sum("raw").cast("long")).first()[0] or 1
         a = ar.select("p", F.expr(f"raw * {HITS_SCALE} div {a_tot}").alias("score"))
         hr = (
             bip.join(a, "p")
@@ -186,7 +188,7 @@ def g_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.sum("score").cast("long").alias("raw"))
             .localCheckpoint(eager=True)
         )
-        h_tot = hr.agg(F.sum("raw").cast("long")).first()[0]
+        h_tot = hr.agg(F.sum("raw").cast("long")).first()[0] or 1
         h = hr.select("c", F.expr(f"raw * {HITS_SCALE} div {h_tot}").alias("score"))
     top_a = (
         a.orderBy(F.desc("score"), "p")

@@ -45,6 +45,9 @@ DIM = 64
 # The cached tree is constructed by the very same code as the uncached
 # path, so plans and results are bit-identical by construction. Memos
 # hold METADATA (unresolved expressions), never data or results.
+# Assumption: one JVM per process. A cached Column is a py4j handle into
+# the gateway that built it; if the gateway is torn down and relaunched
+# in-process, the cached trees dangle and these caches must be cleared.
 
 
 def _as_double(col: str | Column) -> Column:
@@ -113,14 +116,23 @@ def lit_double_array(values) -> Column:
     that round-trips the IEEE double, and Spark's ``<text>D`` literal
     parses via Double.parseDouble (correctly rounded), so the values
     are bit-identical to ``F.array(*[F.lit(float(x)) ...])`` —
-    verified elementwise in tests. Cached per value tuple: repeat
-    builds of the same query vector cost zero round trips."""
+    verified elementwise in tests. NaN and ±inf have no literal form
+    and are spelled as string casts, which Spark parses exactly.
+    Cached per value tuple: repeat builds of the same query vector
+    cost zero round trips."""
     return _lit_double_array(tuple(float(x) for x in values))
+
+
+_NON_FINITE_SQL = {
+    r: f"CAST('{name}' AS DOUBLE)"
+    for r, name in (("nan", "NaN"), ("inf", "Infinity"), ("-inf", "-Infinity"))
+}
 
 
 @lru_cache(maxsize=512)
 def _lit_double_array(values: tuple) -> Column:
-    return F.expr("array(" + ", ".join(f"{v!r}D" for v in values) + ")")
+    items = (_NON_FINITE_SQL.get(repr(v), f"{v!r}D") for v in values)
+    return F.expr("array(" + ", ".join(items) + ")")
 
 
 @lru_cache(maxsize=512)

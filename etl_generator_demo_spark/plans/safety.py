@@ -43,6 +43,9 @@ class SafetyVerdict:
     is_blocked: bool
     block_reason: str | None
     is_write: bool
+    #: the statement's leading word, upper-cased ("" when none): the
+    #: router reads it instead of re-scanning the text
+    keyword: str
 
 
 def _skip_string(s: str, i: int) -> int:
@@ -132,11 +135,13 @@ def _strip_comments(sql: str) -> str:
 
 
 def _first_keyword(sql: str) -> str:
+    """The leading word, whole: ``SELECT1`` is an identifier to Spark's
+    lexer (maximal munch), not the keyword ``SELECT``."""
     stripped = _strip_comments(sql).strip().rstrip(";").strip()
     if stripped.startswith("("):
         # parenthesized query expression: can only be a read
         return "("
-    m = re.match(r"[A-Za-z_]+", stripped)
+    m = re.match(r"[A-Za-z_]\w*", stripped)
     return m.group(0).upper() if m else ""
 
 
@@ -261,8 +266,12 @@ def validate_sql_safety(sql: str, allow_writes: bool = False) -> SafetyVerdict:
     matching the demo-mode behavior of ``sql_generator.py:253-266``.
     """
     if not sql or not sql.strip():
-        return SafetyVerdict(True, "empty SQL statement", False)
-    kw = _first_keyword(sql)
+        return SafetyVerdict(True, "empty SQL statement", False, "")
+    lead = kw = _first_keyword(sql)
+
+    def verdict(is_blocked: bool, block_reason: str | None, is_write: bool):
+        return SafetyVerdict(is_blocked, block_reason, is_write, lead)
+
     if kw == "WITH":
         # classify by the statement BODY: a CTE prefix on DML is DML
         body = _cte_body_keyword(sql)
@@ -271,21 +280,21 @@ def validate_sql_safety(sql: str, allow_writes: bool = False) -> SafetyVerdict:
         elif body in _READ_KEYWORDS or body == "(" or body == "":
             # "" = malformed WITH; Spark's parser will reject it, and
             # a statement with no body cannot write
-            return SafetyVerdict(False, None, False) if body else SafetyVerdict(
+            return verdict(False, None, False) if body else verdict(
                 True, "malformed WITH statement (no body)", False
             )
         else:
-            return SafetyVerdict(
+            return verdict(
                 True, f"unrecognized WITH body statement: {body!r}", False
             )
     if kw in _READ_KEYWORDS or kw == "(":
-        return SafetyVerdict(False, None, False)
+        return verdict(False, None, False)
     if kw in _WRITE_KEYWORDS:
         if allow_writes:
-            return SafetyVerdict(False, None, True)
-        return SafetyVerdict(
+            return verdict(False, None, True)
+        return verdict(
             True, f"only read-only queries are allowed (statement starts with {kw})", True
         )
     # Unrecognized leading token: conservative block (the reference
     # would have sent it to the DB and surfaced the DB error).
-    return SafetyVerdict(True, f"unrecognized statement type: {kw or sql[:20]!r}", False)
+    return verdict(True, f"unrecognized statement type: {kw or sql[:20]!r}", False)

@@ -1,5 +1,5 @@
-"""UPDATE / DELETE over immutable parquet — SURVEY.md §2.9 D1 and
-§7.4 "hard parts".
+"""UPDATE / DELETE / MERGE over immutable parquet — SURVEY.md §2.9 D1
+and §7.4 "hard parts".
 
 The reference commits arbitrary DML to the remote DB
 (``db_connector.py:244-251``). Plain Spark tables are immutable, so
@@ -8,8 +8,13 @@ classic pre-lakehouse idiom (Delta/Iceberg replace this with
 transactional MERGE; neither is bundled here, and the rewrite keeps
 the engine dependency-free).
 
-Safety: the rewrite stages to a sibling directory and swaps only
-after the write succeeds — a failed job never destroys the source.
+The module owns what every table writer shares: the whole-table
+publish (:func:`publish`) and the DML row semantics (:func:`match`,
+:func:`updated_rows`, :func:`surviving_rows`, :func:`upserted_rows`),
+which the partition-scoped writers and ``sources/txlog.py`` build on
+too — an UPDATE, DELETE or MERGE means the same rows whichever
+storage protocol commits it.
+
 At 100 TB you'd partition the table and rewrite only affected
 partitions; `predicate_partitions` shows that path.
 """
@@ -17,11 +22,12 @@ partitions; `predicate_partitions` shows that path.
 from __future__ import annotations
 
 import contextlib
+import json
 import os
 import shutil
 import tempfile
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -37,7 +43,9 @@ def table_lock(path: str):
     over ``<path>.lock`` for its WHOLE read-modify-write, giving
     deterministic serialized semantics: both mutations apply, in some
     order, and neither's effect is lost. Blocking (not fail-fast) —
-    mutations are rare and short next to analytics scans.
+    mutations are rare and short next to analytics scans. Once the
+    lock is held, ``recover_staged`` repairs an interrupted swap, so
+    every writer starts from the whole table.
 
     Documented deviation from the reference, which delegates DML to
     PostgreSQL's real transactions (db_connector.py:244-251): flock is
@@ -48,9 +56,11 @@ def table_lock(path: str):
     import fcntl
 
     lock_path = path + ".lock"
+    os.makedirs(os.path.dirname(os.path.abspath(lock_path)), exist_ok=True)
     fd = os.open(lock_path, os.O_CREAT | os.O_RDWR, 0o644)
     try:
         fcntl.flock(fd, fcntl.LOCK_EX)
+        recover_staged(path)
         yield
     finally:
         fcntl.flock(fd, fcntl.LOCK_UN)
@@ -68,11 +78,12 @@ def _rm(target: str) -> None:
 
 def recover_staged(path: str) -> bool:
     """Crash recovery for the staged swap: the two-rename window in
-    ``_staged_overwrite`` is NOT atomic — a crash between
+    ``publish`` is NOT atomic — a crash between
     ``rename(path, path.old)`` and ``rename(staging, path)`` leaves the
-    data only at ``path.old``. Callers (and every mutation entry point
-    here) run this first: if the table is missing but ``.old`` exists,
-    restore it. Returns True when a restore happened."""
+    data only at ``path.old``. ``table_lock`` runs this once the lock
+    is held, and lockless callers run it first: if the table is missing
+    but ``.old`` exists, restore it. Returns True when a restore
+    happened."""
     old = path + ".old"
     if not os.path.exists(path) and os.path.exists(old):
         os.rename(old, path)
@@ -123,30 +134,124 @@ def _part_staging_prefix(path: str) -> str:
     return f".staging_part_{os.path.basename(os.path.abspath(path))}_"
 
 
-def _staged_overwrite(spark: SparkSession, path: str, df) -> int:
-    """Write df to a staging dir, then swap into `path`.
+def publish(
+    spark: SparkSession,
+    path: str,
+    df,
+    audits: "list[tuple[str, callable]]" = (),
+    sidecars: dict | None = None,
+) -> int:
+    """The one whole-table stage-and-swap. Writes ``df`` to a staging
+    sibling of ``path``, counts the staged rows, runs each audit
+    (``(name, fn)``; a truthy ``fn(staged)`` is the error, raised as
+    :class:`AuditFailure`), writes each ``sidecars`` entry (file name →
+    JSON value) into staging, then parks the live table at
+    ``path.old``, renames staging in and drops ``.old``; an absent
+    ``path`` is created. Returns the staged row count.
 
-    The swap is two renames, so there is a small non-atomic window
-    where `path` does not exist (data parked at `path.old`); a failed
-    WRITE never touches the source, and a crash inside the window is
-    repaired by ``recover_staged``. Concurrent readers mid-swap can
-    see a missing table — single-writer semantics, like the
-    pre-lakehouse idiom this models (Delta/Iceberg replace it with a
-    manifest pointer flip)."""
+    A failed write or audit never touches the live table. A crash
+    between the two renames leaves the data at ``path.old``, which
+    :func:`recover_staged` restores; sidecars move with the data.
+    Readers mid-swap can see a missing table, and writers must be
+    serialized (``table_lock``, or a single writer) — the
+    pre-lakehouse idiom, which Delta/Iceberg replace with a manifest
+    pointer flip."""
     parent = os.path.dirname(os.path.abspath(path))
     staging = tempfile.mkdtemp(prefix=".staging_", dir=parent)
     try:
         df.write.mode("overwrite").parquet(staging)
-        n = spark.read.parquet(staging).count()
+        staged = spark.read.parquet(staging)
+        n = staged.count()
+        for name, audit in audits:
+            err = audit(staged)
+            if err:
+                raise AuditFailure(name, str(err))
+        for name, value in (sidecars or {}).items():
+            with open(os.path.join(staging, name), "w") as fh:
+                json.dump(value, fh)
     except Exception:
         shutil.rmtree(staging, ignore_errors=True)
         raise
     old = path + ".old"
     _rm(old)  # a leftover .old (file or dir) would break the rename
-    os.rename(path, old)
+    if os.path.exists(path):
+        os.rename(path, old)
     os.rename(staging, path)
     _rm(old)
     return n
+
+
+# -- DML row semantics: the one definition every writer builds from ------
+
+
+def match(predicate) -> Column:
+    """NULL-safe match column for an UPDATE/DELETE predicate (SQL text
+    or a Column): a row whose predicate is NULL matches nothing — it is
+    neither updated nor deleted. ``~cond`` on a bare predicate is NULL
+    for those rows, so a survivors filter would silently drop them."""
+    cond = F.expr(predicate) if isinstance(predicate, str) else predicate
+    return F.coalesce(cond, F.lit(False))
+
+
+def updated_rows(df, assignments: dict[str, str], cond: Column):
+    """UPDATE: every row of ``df``, with each ``col = expr`` assignment
+    applied where ``cond`` (a :func:`match` column) holds."""
+    out = df
+    for col, expr in assignments.items():
+        if col not in df.columns:
+            raise ValueError(f"unknown column in UPDATE: {col!r}")
+        out = out.withColumn(col, F.when(cond, F.expr(expr)).otherwise(F.col(col)))
+    return out
+
+
+def surviving_rows(df, cond: Column):
+    """DELETE: the rows of ``df`` that ``cond`` (a :func:`match`
+    column) does not match."""
+    return df.filter(~cond)
+
+
+def upserted_rows(target, source, key_cols: list[str]):
+    """MERGE ... WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN
+    INSERT *: target rows whose key has a source row are replaced by
+    it (a key held by several target rows collapses to the one source
+    row), the other source rows are inserted. The source must carry
+    the key columns and exactly the target's columns; duplicate source
+    keys are rejected separately by :func:`unique_source_count`."""
+    missing = [
+        c for c in key_cols if c not in target.columns or c not in source.columns
+    ]
+    if missing:
+        raise ValueError(f"merge key columns missing from source or target: {missing}")
+    if set(source.columns) != set(target.columns):
+        raise ValueError(
+            f"merge source columns {sorted(source.columns)} != target {sorted(target.columns)}"
+        )
+    return target.join(source, key_cols, "left_anti").unionByName(
+        source.select(*target.columns)
+    )
+
+
+def unique_source_count(source, key_cols: list[str]) -> int:
+    """Row count of a MERGE source, which must hold each key once:
+    duplicate source keys would make the upsert non-deterministic
+    (which copy wins?) — rejected like ANSI MERGE's cardinality
+    error."""
+    n_src = source.count()
+    if source.select(*key_cols).distinct().count() != n_src:
+        raise ValueError("merge source has duplicate keys")
+    return n_src
+
+
+def _rewrite_matching(spark: SparkSession, path: str, predicate: str, rows) -> int:
+    """Whole-table UPDATE/DELETE: ``rows(df, cond)`` builds the new
+    table, which replaces the old one through :func:`publish`.
+    Returns the number of rows the predicate matched."""
+    with table_lock(path):
+        df = spark.read.parquet(path)
+        cond = match(predicate)
+        n_matched = df.filter(cond).count()
+        publish(spark, path, rows(df, cond))
+        return n_matched
 
 
 def update_parquet(
@@ -154,34 +259,15 @@ def update_parquet(
 ) -> int:
     """UPDATE <path> SET col=expr, ... WHERE predicate.
     Returns the number of rows that matched the predicate."""
-    with table_lock(path):
-        recover_staged(path)
-        df = spark.read.parquet(path)
-        cond = F.expr(predicate)
-        n_matched = df.filter(cond).count()
-        out = df
-        for col, expr in assignments.items():
-            if col not in df.columns:
-                raise ValueError(f"unknown column in UPDATE: {col!r}")
-            out = out.withColumn(col, F.when(cond, F.expr(expr)).otherwise(F.col(col)))
-        _staged_overwrite(spark, path, out)
-        return n_matched
+    return _rewrite_matching(
+        spark, path, predicate, lambda df, cond: updated_rows(df, assignments, cond)
+    )
 
 
 def delete_parquet(spark: SparkSession, path: str, predicate: str) -> int:
-    """DELETE FROM <path> WHERE predicate. Returns rows deleted.
-
-    SQL DELETE semantics for NULLs: a row whose predicate evaluates to
-    NULL is KEPT (``~NULL`` is NULL, so a plain ``filter(~cond)`` would
-    silently drop it and under-report the count — the survivors filter
-    keeps everything where the predicate is not TRUE)."""
-    with table_lock(path):
-        recover_staged(path)
-        df = spark.read.parquet(path)
-        cond = F.coalesce(F.expr(predicate), F.lit(False))
-        n_deleted = df.filter(cond).count()
-        _staged_overwrite(spark, path, df.filter(~cond))
-        return n_deleted
+    """DELETE FROM <path> WHERE predicate. Returns rows deleted; rows
+    whose predicate is NULL are kept (:func:`match`)."""
+    return _rewrite_matching(spark, path, predicate, surviving_rows)
 
 
 def merge_parquet(
@@ -190,36 +276,19 @@ def merge_parquet(
     source,
     key_cols: list[str],
 ) -> tuple[int, int]:
-    """MERGE/upsert: rows of `source` whose key matches an existing
-    target row REPLACE it; unmatched source rows are inserted —
-    ``MERGE .. WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN
-    INSERT *`` (reference D1 parity: ``db_connector.py:244-251``
-    commits arbitrary DML to PostgreSQL; plain parquet gets the same
-    effect via anti-join + union + staged swap, the idiom lakehouse
-    MERGE replaces with a transactional commit).
+    """MERGE/upsert of `source` into the table at `path`
+    (:func:`upserted_rows`; reference D1 parity: ``db_connector.py:
+    244-251`` commits arbitrary DML to PostgreSQL; plain parquet gets
+    the same effect via anti-join + union + staged swap, the idiom
+    lakehouse MERGE replaces with a transactional commit).
 
-    Returns (n_updated, n_inserted). The source must carry exactly the
-    target's columns; a failed write leaves the target intact.
+    Returns (n_updated, n_inserted). A failed write leaves the target
+    intact.
     """
     with table_lock(path):
-        recover_staged(path)
         target = spark.read.parquet(path)
-        missing = [
-            c for c in key_cols if c not in target.columns or c not in source.columns
-        ]
-        if missing:
-            raise ValueError(
-                f"merge key columns missing from source or target: {missing}"
-            )
-        if set(source.columns) != set(target.columns):
-            raise ValueError(
-                f"merge source columns {sorted(source.columns)} != target {sorted(target.columns)}"
-            )
-        # Duplicate source keys would make the upsert non-deterministic
-        # (which copy wins?) — reject, like ANSI MERGE's cardinality error.
-        n_src = source.count()
-        if source.select(*key_cols).distinct().count() != n_src:
-            raise ValueError("merge source has duplicate keys")
+        merged = upserted_rows(target, source, key_cols)
+        n_src = unique_source_count(source, key_cols)
         # count matched TARGET KEYS, not matched target rows: a target
         # holding duplicate keys (prior appends) collapses to the single
         # source row per key — n_updated must agree with the rows actually
@@ -232,10 +301,7 @@ def merge_parquet(
             .join(source, key_cols, "left_semi")
             .count()
         )
-        merged = target.join(source, key_cols, "left_anti").unionByName(
-            source.select(*target.columns)
-        )
-        _staged_overwrite(spark, path, merged)
+        publish(spark, path, merged)
         return n_updated, n_src - n_updated
 
 
@@ -255,7 +321,6 @@ def compact_parquet(
     import glob
 
     with table_lock(path):
-        recover_staged(path)
         parts_before = glob.glob(os.path.join(path, "*.parquet")) + glob.glob(
             os.path.join(path, "part-*")
         )
@@ -263,7 +328,7 @@ def compact_parquet(
         total_bytes = sum(os.path.getsize(p) for p in set(parts_before))
         n_target = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))  # ceil
         df = spark.read.parquet(path).repartition(int(n_target))
-        _staged_overwrite(spark, path, df)
+        publish(spark, path, df)
         n_after = len(
             set(
                 glob.glob(os.path.join(path, "*.parquet"))
@@ -330,7 +395,6 @@ def _partition_scoped_mutation(
     from urllib.parse import unquote
 
     with table_lock(path):
-        recover_staged(path)
         recover_partition_staged(path)
         df = spark.read.parquet(path)
         if partition_col not in df.columns:
@@ -338,7 +402,7 @@ def _partition_scoped_mutation(
         if verify_containment:
             n_outside = (
                 df.filter(f"NOT ({partition_filter})")
-                .filter(F.coalesce(F.expr(predicate), F.lit(False)))
+                .filter(match(predicate))
                 .count()
             )
             if n_outside:
@@ -348,7 +412,7 @@ def _partition_scoped_mutation(
                     "filter or run the unscoped mutation"
                 )
         affected = df.filter(partition_filter)  # partition-pruned scan
-        cond = F.coalesce(F.expr(predicate), F.lit(False))
+        cond = match(predicate)
         n_matched = affected.filter(cond).count()
         out = transform(affected, cond)
         # Stage-then-swap per partition (never overwrite a path being
@@ -433,20 +497,13 @@ def update_parquet_partitioned(
     row count."""
 
     def transform(affected, cond):
-        out = affected
-        for col, expr in assignments.items():
-            if col not in affected.columns:
-                raise ValueError(f"unknown column in UPDATE: {col!r}")
-            if col == partition_col:
-                raise ValueError(
-                    "partition-scoped UPDATE cannot reassign the partition "
-                    f"column {col!r} (rows would move partitions — use the "
-                    "unscoped rewrite)"
-                )
-            out = out.withColumn(
-                col, F.when(cond, F.expr(expr)).otherwise(F.col(col))
+        if partition_col in assignments:
+            raise ValueError(
+                "partition-scoped UPDATE cannot reassign the partition "
+                f"column {partition_col!r} (rows would move partitions — "
+                "use the unscoped rewrite)"
             )
-        return out
+        return updated_rows(affected, assignments, cond)
 
     return _partition_scoped_mutation(
         spark, path, partition_col, partition_filter, predicate, transform,
@@ -467,12 +524,7 @@ def delete_parquet_partitioned(
     deleted row count. NULL-predicate rows are KEPT (SQL DELETE
     semantics, as in `delete_parquet`)."""
     return _partition_scoped_mutation(
-        spark,
-        path,
-        partition_col,
-        partition_filter,
-        predicate,
-        lambda affected, cond: affected.filter(~cond),
+        spark, path, partition_col, partition_filter, predicate, surviving_rows,
         verify_containment,
     )
 
@@ -607,7 +659,6 @@ def _zorder_rewrite_locked(
         TimestampType,
     )
 
-    recover_staged(path)
     df = spark.read.parquet(path)
     a, b = cols
 
@@ -679,7 +730,7 @@ def _zorder_rewrite_locked(
         .sortWithinPartitions("_z")
         .drop("_z", "_ka_d", "_kb_d", "_ra_d", "_rb_d")
     )
-    _staged_overwrite(spark, path, out)
+    publish(spark, path, out)
 
 
 class AuditFailure(Exception):
@@ -720,31 +771,9 @@ def write_audit_publish(
     (r13 advice); the write+audit phases hold it too — a publish that
     raced a concurrent UPDATE's swap could otherwise crash in the
     rename window or silently discard that UPDATE."""
-    import tempfile
-
-    parent = os.path.dirname(os.path.abspath(path))
-    os.makedirs(parent, exist_ok=True)
     with table_lock(path):
-        recover_staged(path)
-        staging = tempfile.mkdtemp(prefix=".staging_", dir=parent)
-        try:
-            df.write.mode("overwrite").parquet(staging)
-            staged = spark.read.parquet(staging)
-            n = staged.count()
-            for name, audit in audits:
-                err = audit(staged)
-                if err:
-                    raise AuditFailure(name, str(err))
-        except Exception:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        old = path + ".old"
-        _rm(old)
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(staging, path)
-        _rm(old)
-        return {"rows": n, "audits": [name for name, _ in audits]}
+        n = publish(spark, path, df, audits)
+    return {"rows": n, "audits": [name for name, _ in audits]}
 
 
 def audit_not_null(*cols: str):

@@ -75,6 +75,14 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_generator_demo_spark.sources.mutations import (
+    match,
+    surviving_rows,
+    unique_source_count,
+    updated_rows,
+    upserted_rows,
+)
+
 
 class CommitConflict(Exception):
     """Raised when a commit loses the version race more than
@@ -476,49 +484,26 @@ class TxTable:
     def update(self, assignments: dict[str, str], predicate: str) -> int:
         """UPDATE ... SET col=expr WHERE predicate (NULL predicate rows
         untouched, SQL semantics)."""
-
-        def transform(snap: DataFrame) -> DataFrame:
-            cond = F.coalesce(F.expr(predicate), F.lit(False))
-            out = snap
-            for col, expr in assignments.items():
-                if col not in snap.columns:
-                    raise ValueError(f"unknown column in UPDATE: {col!r}")
-                out = out.withColumn(
-                    col, F.when(cond, F.expr(expr)).otherwise(F.col(col))
-                )
-            return out
-
-        return self._read_modify_write("update", transform, predicate)
+        return self._read_modify_write(
+            "update",
+            lambda snap: updated_rows(snap, assignments, match(predicate)),
+            predicate,
+        )
 
     def delete(self, predicate: str) -> int:
         """DELETE WHERE predicate (NULL predicate rows KEPT)."""
-
-        def transform(snap: DataFrame) -> DataFrame:
-            cond = F.coalesce(F.expr(predicate), F.lit(False))
-            return snap.filter(~cond)
-
-        return self._read_modify_write("delete", transform, predicate)
+        return self._read_modify_write(
+            "delete", lambda snap: surviving_rows(snap, match(predicate)), predicate
+        )
 
     def merge(self, source: DataFrame, key_cols: list[str]) -> int:
         """MERGE: matched keys replaced by the source row, unmatched
-        inserted (WHEN MATCHED UPDATE SET * / WHEN NOT MATCHED INSERT
-        *). Duplicate source keys rejected, like ANSI MERGE's
-        cardinality error."""
-        n_src = source.count()
-        if source.select(*key_cols).distinct().count() != n_src:
-            raise ValueError("merge source has duplicate keys")
-
-        def transform(snap: DataFrame) -> DataFrame:
-            if set(source.columns) != set(snap.columns):
-                raise ValueError(
-                    f"merge source columns {sorted(source.columns)} != "
-                    f"target {sorted(snap.columns)}"
-                )
-            return snap.join(source, key_cols, "left_anti").unionByName(
-                source.select(*snap.columns)
-            )
-
-        return self._read_modify_write("merge", transform, None)
+        inserted (``sources.mutations.upserted_rows``). Duplicate
+        source keys rejected, like ANSI MERGE's cardinality error."""
+        unique_source_count(source, key_cols)
+        return self._read_modify_write(
+            "merge", lambda snap: upserted_rows(snap, source, key_cols), None
+        )
 
     def add_columns(self, cols: dict[str, str]) -> int:
         """ALTER TABLE ADD COLUMNS as a METADATA-ONLY commit (Delta's
@@ -1202,8 +1187,7 @@ class StatsTxTable(TxTable):
             return self._split_by_range(state, col, lo, hi)
 
         def transform(sub: DataFrame) -> DataFrame:
-            cond = F.col(col).between(F.lit(lo), F.lit(hi))
-            return row_transform(sub, cond)
+            return row_transform(sub, match(F.col(col).between(F.lit(lo), F.lit(hi))))
 
         return self._read_modify_write(op, transform, pred, scope=scope)
 
@@ -1212,25 +1196,16 @@ class StatsTxTable(TxTable):
         touching only the zone-map-intersecting files. Returns the
         committed version. Rows of touched files OUTSIDE the range are
         rewritten unchanged (file granularity, like Delta)."""
-
-        def row_transform(sub: DataFrame, cond) -> DataFrame:
-            out = sub
-            for c, expr in assignments.items():
-                if c not in sub.columns:
-                    raise ValueError(f"unknown column in UPDATE: {c!r}")
-                out = out.withColumn(
-                    c, F.when(cond, F.expr(expr)).otherwise(F.col(c))
-                )
-            return out
-
-        return self._range_scoped("update", col, lo, hi, row_transform)
+        return self._range_scoped(
+            "update", col, lo, hi,
+            lambda sub, cond: updated_rows(sub, assignments, cond),
+        )
 
     def delete_range(self, col: str, lo, hi) -> int:
         """DELETE WHERE ``col BETWEEN lo AND hi``, touching only the
-        zone-map-intersecting files."""
-        return self._range_scoped(
-            "delete", col, lo, hi, lambda sub, cond: sub.filter(~cond)
-        )
+        zone-map-intersecting files; rows whose ``col`` is NULL are
+        kept, as in :meth:`TxTable.delete`."""
+        return self._range_scoped("delete", col, lo, hi, surviving_rows)
 
 
 def _schema_evolution_oracle() -> str:

@@ -123,8 +123,8 @@ def incremental_agg_sink(target_dir: str, key_cols: list[str], sum_cols: list[st
     rename, so a crash anywhere leaves them consistent (a crash after
     the swap used to re-apply the batch on restart and double-count).
     The parquet reader ignores the sidecar (underscore-prefixed, like
-    ``_SUCCESS``). Single-writer per target_dir, same contract as
-    ``_staged_overwrite``.
+    ``_SUCCESS``). The swap is ``sources.mutations.publish``;
+    single-writer per target_dir.
 
     At 100 TB this is the cheap nightly alternative to recompute: the
     state is |keys| rows regardless of history, and each batch costs
@@ -133,10 +133,8 @@ def incremental_agg_sink(target_dir: str, key_cols: list[str], sum_cols: list[st
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         import json
         import os
-        import shutil
-        import tempfile
 
-        from etl_generator_demo_spark.sources.mutations import recover_staged
+        from etl_generator_demo_spark.sources.mutations import publish, recover_staged
 
         spark = batch_df.sparkSession
         data_dir = os.path.join(target_dir, "state")
@@ -157,41 +155,23 @@ def incremental_agg_sink(target_dir: str, key_cols: list[str], sum_cols: list[st
         if batch_id in done:
             return  # replay after a sink-side success: idempotent skip
 
-        delta = batch_df.groupBy(*key_cols).agg(
+        state = batch_df.groupBy(*key_cols).agg(
             F.count(F.lit(1)).cast("long").alias("n_rows"),
             *[F.sum(c).cast("long").alias(f"sum_{c}") for c in sum_cols],
         )
-        os.makedirs(target_dir, exist_ok=True)
-        staging = tempfile.mkdtemp(prefix=".staging_", dir=os.path.abspath(target_dir))
-        try:
-            if os.path.exists(os.path.join(data_dir, "_SUCCESS")):
-                cur = spark.read.parquet(data_dir)
-                merged = (
-                    cur.unionByName(delta)
-                    .groupBy(*key_cols)
-                    .agg(
-                        F.sum("n_rows").cast("long").alias("n_rows"),
-                        *[
-                            F.sum(f"sum_{c}").cast("long").alias(f"sum_{c}")
-                            for c in sum_cols
-                        ],
-                    )
+        if os.path.exists(os.path.join(data_dir, "_SUCCESS")):
+            state = (
+                spark.read.parquet(data_dir)
+                .unionByName(state)
+                .groupBy(*key_cols)
+                .agg(
+                    F.sum("n_rows").cast("long").alias("n_rows"),
+                    *[F.sum(f"sum_{c}").cast("long").alias(f"sum_{c}") for c in sum_cols],
                 )
-                merged.write.mode("overwrite").parquet(staging)
-            else:
-                delta.write.mode("overwrite").parquet(staging)
-            # marker joins the data in staging: they swap in atomically
-            with open(os.path.join(staging, marker_name), "w") as fh:
-                json.dump(sorted(done | {batch_id}), fh)
-        except Exception:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        old = data_dir + ".old"
-        shutil.rmtree(old, ignore_errors=True)
-        if os.path.exists(data_dir):
-            os.rename(data_dir, old)
-        os.rename(staging, data_dir)
-        shutil.rmtree(old, ignore_errors=True)
+            )
+        os.makedirs(target_dir, exist_ok=True)
+        # the marker joins the data in staging: they swap in together
+        publish(spark, data_dir, state, sidecars={marker_name: sorted(done | {batch_id})})
         legacy = os.path.join(target_dir, marker_name)
         if os.path.exists(legacy):  # ids already folded into the sidecar
             os.remove(legacy)

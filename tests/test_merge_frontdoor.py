@@ -109,6 +109,31 @@ class TestParser:
         assert spec.key_cols == ("k",)
 
 
+@pytest.mark.parametrize(
+    "sql, routed",
+    [
+        ("MERGE INTO t USING s ON t.k = s.k", True),
+        ("  merge into t using s on t.k = s.k", True),
+        ("/* lead */ MERGE INTO t USING s ON t.k = s.k", True),
+        ("-- lead\nMerge INTO t USING s ON t.k = s.k", True),
+        ("MERGE/*x*/INTO t USING s ON t.k = s.k", True),
+        ("WITH s AS (SELECT 1 AS k) MERGE INTO t USING s ON t.k = s.k", False),
+        ("MERGE_INTO t", False),
+        ("MERGE1 INTO t", False),
+        ("(MERGE INTO t USING s ON t.k = s.k)", False),
+        ("INSERT INTO t SELECT 'MERGE'", False),
+        ("SELECT 1 AS merge", False),
+    ],
+)
+def test_merge_routing_reads_the_gate_keyword(sql, routed):
+    """The front door routes a write to the MERGE handler when the
+    statement's leading word (comments skipped) is MERGE, as the gate
+    reports it — a CTE-prefixed MERGE or a longer identifier is not
+    routed."""
+    verdict = validate_sql_safety(sql, allow_writes=True)
+    assert (verdict.is_write and verdict.keyword == "MERGE") is routed
+
+
 class TestFrontDoor:
     def test_merge_upsert_and_replay_noop(self, spark, wr_engine, mut_dir):
         before = spark.read.parquet(f"{mut_dir}/nation.parquet").count()

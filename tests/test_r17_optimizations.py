@@ -142,7 +142,8 @@ def test_lit_double_array_bit_exact(spark):
     """`lit_double_array` (one parsed `F.expr` round trip) must be
     bit-identical to the per-element `F.lit` spelling for arbitrary
     doubles, including denormals/extremes: Python repr round-trips the
-    IEEE value and Spark's `<text>D` literal parses correctly-rounded."""
+    IEEE value and Spark's `<text>D` literal parses correctly-rounded;
+    NaN and ±inf go through string casts."""
     import random
     import struct
 
@@ -151,6 +152,7 @@ def test_lit_double_array_bit_exact(spark):
     rng = random.Random(17)
     vals = [rng.uniform(-1e6, 1e6) for _ in range(64)] + [
         0.1, -0.0, 1e-09, 5e-324, 1.7976931348623157e308, -3.141592653589793,
+        float("nan"), float("inf"), float("-inf"),
     ]
     row = (
         spark.range(1)

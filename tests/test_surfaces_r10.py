@@ -165,6 +165,31 @@ def test_hits_star_hub(spark, tmp_path):
     assert top_hub["node_id"] == 1  # the buy-everything customer
 
 
+def test_hits_empty_bipartite_matches_oracle(spark, tmp_path):
+    """With no orders the purchase graph is empty: the per-sweep score
+    totals are NULL, and the inlined divisor must not turn that into an
+    unparseable expression. Both engines return no rows."""
+    import os
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from etl_generator_demo_spark.registry import load_all
+
+    orders = pq.read_table(f"{SF}/orders.parquet")
+    pq.write_table(orders.slice(0, 0), str(tmp_path / "orders.parquet"))
+    os.symlink(f"{SF}/lineitem.parquet", tmp_path / "lineitem.parquet")
+
+    got = g_hits_bipartite(spark, str(tmp_path)).collect()
+    con = duckdb.connect()
+    for name in ("orders", "lineitem"):
+        con.execute(
+            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{tmp_path}/{name}.parquet')"
+        )
+    want = con.execute(load_all()["g_hits_bipartite"].oracle).fetchall()
+    assert got == [] and want == []
+
+
 # ---------------------------------------------------------------------------
 # SSSP
 # ---------------------------------------------------------------------------
