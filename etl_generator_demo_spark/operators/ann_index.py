@@ -25,8 +25,8 @@ for the partitioned write); each query touches
 ``O(candidates)`` rows instead of ``O(corpus)``. Storage is L× for
 LSH (the standard multi-table trade) and 1× for IVF. On a real
 cluster the same layout lands in the table format's partition spec;
-here it lives in a local cache directory keyed by corpus
-fingerprint (path+size+mtime), so a regenerated fixture rebuilds
+here it lives in the persisted-index store (``index_store.py``,
+keyed by corpus fingerprint), so a regenerated fixture rebuilds
 automatically and repeated queries — the driver's correctness run,
 bench.py's min-of-2 — reuse the artifact.
 
@@ -36,14 +36,13 @@ PostgreSQL); north-star semantics per BASELINE.json / SURVEY §2.12.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from etl_generator_demo_spark.catalog import read_parquet_known
 from pyspark.sql import functions as F
 
+from etl_generator_demo_spark.operators import index_store
 from etl_generator_demo_spark.operators.similarity import (
     DIM,
     _as_double,
@@ -56,50 +55,22 @@ from etl_generator_demo_spark.operators.similarity import (
 )
 from etl_generator_demo_spark.registry import register
 
-#: On-disk cache root. Lives inside the repo (gitignored) so any
-#: process — pytest, bench.py, the external driver — shares one cache
-#: regardless of cwd.
-INDEX_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".index_cache")
-
 LSH_TABLES = 8
 LSH_PLANES = 4
 IVF_LISTS = 16
 
 
-def _corpus_fingerprint(sf_dir: str, table: str = "embeddings") -> str:
-    """Fingerprint the source parquet so a regenerated fixture (same
-    path, new contents) invalidates the cache."""
-    p = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
-    try:
-        st = os.stat(p)
-        raw = f"{p}|{st.st_size}|{int(st.st_mtime)}"
-    except OSError:
-        raw = p
-    return hashlib.md5(raw.encode()).hexdigest()[:12]
-
-
-def _index_dir(sf_dir: str, kind: str, tag: str) -> str:
-    return os.path.join(INDEX_ROOT, _corpus_fingerprint(sf_dir), f"{kind}_{tag}")
-
-
-def _is_built(path: str) -> bool:
-    # _SUCCESS, not the directory: a crashed build leaves a partial dir
-    # (and background-shell /tmp isolation makes bare-dir checks lie).
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
-
-
 # --- LSH ------------------------------------------------------------------
 
-def build_lsh_index(
+def lsh_index_rows(
     vectors: DataFrame,
-    out_dir: str,
     tables: int = LSH_TABLES,
     planes: int = LSH_PLANES,
     dim: int = DIM,
-) -> None:
+) -> DataFrame:
     """One vectorized pass: for each row emit `tables` rows
-    (vec_id, label, embedding, lsh_table, bucket) and write them
-    partitioned by (lsh_table, bucket).
+    (vec_id, label, embedding, lsh_table, bucket), laid out to be
+    written partitioned by (lsh_table, bucket).
 
     The bucket test is an Arrow-batched numpy matmul (tables*planes
     dot products per row) — the kernel where vectorized BLAS beats
@@ -140,15 +111,9 @@ def build_lsh_index(
         list(vectors.schema.fields)
         + [StructField("lsh_table", IntegerType()), StructField("bucket", StringType())]
     )
-    indexed = vectors.mapInPandas(assign, schema)
     # tables*16 buckets of output; repartition by the partition columns so
     # each (table, bucket) directory is written by one task, not 32.
-    (
-        indexed.repartition("lsh_table", "bucket")
-        .write.mode("overwrite")
-        .partitionBy("lsh_table", "bucket")
-        .parquet(out_dir)
-    )
+    return vectors.mapInPandas(assign, schema).repartition("lsh_table", "bucket")
 
 
 def ensure_lsh_index(
@@ -161,10 +126,12 @@ def ensure_lsh_index(
     its path. Idempotent and cheap when warm (one stat call)."""
     from etl_generator_demo_spark.operators.relational import t
 
-    path = _index_dir(sf_dir, "lsh", f"t{tables}p{planes}v2")
-    if not _is_built(path):
-        build_lsh_index(t(spark, sf_dir, "embeddings"), path, tables, planes)
-    return path
+    return index_store.ensure(
+        spark,
+        index_store.index_path(sf_dir, f"lsh_t{tables}p{planes}v2"),
+        lambda: (lsh_index_rows(t(spark, sf_dir, "embeddings"), tables, planes),),
+        partition_by=("lsh_table", "bucket"),
+    )[0]
 
 
 def query_buckets(query_vec: list[float], tables: int = LSH_TABLES, planes: int = LSH_PLANES) -> list[str]:
@@ -184,6 +151,79 @@ def query_buckets(query_vec: list[float], tables: int = LSH_TABLES, planes: int 
     return out
 
 
+def _read_probed(spark: SparkSession, path: str, probes) -> DataFrame:
+    """The LSH index rows in the probed ``(lsh_table, bucket)``
+    directories: one read of those that exist (an empty bucket has no
+    directory; basePath keeps the partition columns), typed-empty when
+    none does.
+
+    Listing ONLY the probed directories instead of discovering all
+    tables×2^planes of them is the point — at toy scale that discovery
+    dominated the probe (bench r2: 0.79 s → ~0.45 s), and on an object
+    store at 100 TB per-query listing of every partition is exactly the
+    overhead a probe must not pay."""
+    dirs = [
+        d
+        for tbl, bucket in probes
+        if os.path.isdir(d := os.path.join(path, f"lsh_table={tbl}", f"bucket={bucket}"))
+    ]
+    if not dirs:
+        return spark.read.parquet(path).limit(0)
+    return spark.read.option("basePath", path).parquet(*dirs)
+
+
+def _lsh_topk(
+    spark: SparkSession,
+    sf_dir: str,
+    query_vec: list[float],
+    per_table: list[list[str]],
+    k: int,
+    tables: int,
+    planes: int,
+    exclude_ids: tuple[int, ...],
+) -> DataFrame:
+    """Top-k over the index rows in ``per_table[tbl]``'s buckets of
+    each table: pruned read, dedupe, exact JVM cosine re-rank. No
+    Python runs on the executors and no non-candidate row is read.
+
+    The equality filter stays on top of the pruned read: it is a no-op
+    on the listed paths but keeps the plan's PartitionFilters explicit
+    (asserted in tests) and guards against a stale directory listing.
+    """
+    path = ensure_lsh_index(spark, sf_dir, tables, planes)
+    idx = _read_probed(
+        spark, path, [(tbl, b) for tbl, buckets in enumerate(per_table) for b in buckets]
+    )
+    # one parsed OR-expression instead of ~10 py4j round trips per
+    # table (r17; bucket ids are engine-generated 'b<bits>' strings,
+    # safe to inline) — same predicate, same pushdown
+    cond = " OR ".join(
+        "(lsh_table = {} AND bucket IN ({}))".format(
+            tbl, ", ".join(f"'{b}'" for b in buckets)
+        )
+        for tbl, buckets in enumerate(per_table)
+    )
+    candidates = idx.filter(cond)
+    if exclude_ids:
+        candidates = candidates.filter(~F.col("vec_id").isin(list(exclude_ids)))
+    # Rank BEFORE deduping: a vector appears in <= one probed bucket per
+    # table with the identical cosine, so the top k*probes ranked copies
+    # are guaranteed to contain >= k distinct vectors. The global rank
+    # compiles to one TakeOrderedAndProject over the pruned scan (no
+    # full shuffle); the dedup then touches <= k*probes rows instead of
+    # exchanging every candidate.
+    ranked = (
+        candidates.withColumn("cosine", _floor6(cosine_lit("embedding", query_vec)))
+        .orderBy(F.desc("cosine"), "vec_id")
+        .limit(k * sum(map(len, per_table)))
+    )
+    return (
+        ranked.dropDuplicates(["vec_id"])
+        .orderBy(F.desc("cosine"), "vec_id")
+        .limit(k)
+    )
+
+
 def lsh_probe_topk(
     spark: SparkSession,
     sf_dir: str,
@@ -194,55 +234,9 @@ def lsh_probe_topk(
     exclude_ids: tuple[int, ...] = (),
 ) -> DataFrame:
     """ANN top-k via the persisted index: a partition-pruned scan of the
-    query's L buckets, dedupe, exact JVM cosine re-rank. No Python runs
-    on the executors and no non-candidate row is read.
-
-    The read lists ONLY the L probed bucket directories (basePath keeps
-    the partition columns) instead of discovering all tables×2^planes
-    directories — at toy scale that discovery dominated the probe
-    (bench r2: 0.79 s → ~0.45 s), and on an object store at 100 TB
-    per-query listing of every partition is exactly the overhead a
-    probe must not pay. The equality filter stays on top: it is a no-op
-    on the pruned paths but keeps the plan's PartitionFilters explicit
-    (asserted in tests) and guards against a stale directory listing.
-    """
-    path = ensure_lsh_index(spark, sf_dir, tables, planes)
-    buckets = query_buckets(query_vec, tables, planes)
-    probe_dirs = [
-        d
-        for tbl, bucket in enumerate(buckets)
-        if os.path.isdir(d := os.path.join(path, f"lsh_table={tbl}", f"bucket={bucket}"))
-    ]
-    if not probe_dirs:  # every probed bucket empty -> no candidates
-        empty = spark.read.parquet(path).limit(0)
-        return empty.withColumn("cosine", F.lit(0.0)).limit(0)
-    idx = spark.read.option("basePath", path).parquet(*probe_dirs)
-    # one parsed OR-expression instead of ~10 py4j round trips per
-    # table (r17; bucket ids are engine-generated 'b<bits>' strings,
-    # safe to inline) — same predicate, same pushdown
-    cond = " OR ".join(
-        f"(lsh_table = {tbl} AND bucket = '{bucket}')"
-        for tbl, bucket in enumerate(buckets)
-    )
-    candidates = idx.filter(cond)
-    if exclude_ids:
-        candidates = candidates.filter(~F.col("vec_id").isin(list(exclude_ids)))
-    # Rank BEFORE deduping: a vector appears in <= `tables` buckets with
-    # the identical cosine, so the top k*tables ranked copies are
-    # guaranteed to contain >= k distinct vectors. The global rank
-    # compiles to one TakeOrderedAndProject over the pruned scan (no
-    # full shuffle); the dedup then touches <= k*tables rows instead of
-    # exchanging every candidate.
-    ranked = (
-        candidates.withColumn("cosine", _floor6(cosine_lit("embedding", query_vec)))
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k * tables)
-    )
-    return (
-        ranked.dropDuplicates(["vec_id"])
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
+    query's L buckets (one per table), dedupe, exact re-rank."""
+    per_table = [[b] for b in query_buckets(query_vec, tables, planes)]
+    return _lsh_topk(spark, sf_dir, query_vec, per_table, k, tables, planes, exclude_ids)
 
 
 # --- IVF ------------------------------------------------------------------
@@ -262,23 +256,19 @@ def ensure_ivf_index(
     from etl_generator_demo_spark.operators.relational import t
     from etl_generator_demo_spark.operators.similarity import build_ivf_index
 
-    path = _index_dir(sf_dir, "ivf", f"l{n_lists}")
-    cj = os.path.join(path, "_CENTROIDS.json")
-    if _is_built(path) and os.path.exists(cj):
-        with open(cj) as fh:
-            return path, json.load(fh)
-    assigned, centroids = build_ivf_index(
-        t(spark, sf_dir, "embeddings"), n_lists=n_lists, seed=seed
+    def build():
+        assigned, centroids = build_ivf_index(
+            t(spark, sf_dir, "embeddings"), n_lists=n_lists, seed=seed
+        )
+        return assigned.repartition("ivf_list"), centroids
+
+    return index_store.ensure(
+        spark,
+        index_store.index_path(sf_dir, f"ivf_l{n_lists}"),
+        build,
+        partition_by=("ivf_list",),
+        sidecars=("_CENTROIDS.json",),
     )
-    (
-        assigned.repartition("ivf_list")
-        .write.mode("overwrite")
-        .partitionBy("ivf_list")
-        .parquet(path)
-    )
-    with open(cj, "w") as fh:
-        json.dump(centroids, fh)
-    return path, centroids
 
 
 def ivf_probe_topk(
@@ -406,19 +396,7 @@ def lsh_probe_batch_topk(
         for tbl, bucket in enumerate(query_buckets(qv, tables, planes))
     ]
     probe = spark.createDataFrame(probe_rows, "qid long, lsh_table int, bucket string")
-    dirs = sorted(
-        {
-            d
-            for _, tbl, bucket in probe_rows
-            if os.path.isdir(d := os.path.join(path, f"lsh_table={tbl}", f"bucket={bucket}"))
-        }
-    )
-    if not dirs:
-        empty = spark.read.parquet(path).limit(0)
-        return empty.select(
-            F.lit(0).cast("long").alias("qid"), "vec_id", F.lit(0.0).alias("cosine")
-        ).limit(0)
-    idx = spark.read.option("basePath", path).parquet(*dirs)
+    idx = _read_probed(spark, path, sorted({(tbl, b) for _, tbl, b in probe_rows}))
     qdf = spark.createDataFrame(
         [(qid, [float(x) for x in qv]) for qid, qv in query_vecs.items()],
         "qid long, qv array<double>",
@@ -544,38 +522,8 @@ def lsh_multiprobe_topk(
     `lsh_probe_topk`: reads the (1+planes)·tables probed bucket
     directories (partition-pruned), exact JVM cosine re-rank. Strictly
     higher recall than single-probe at ~5× the (tiny) probe I/O."""
-    path = ensure_lsh_index(spark, sf_dir, tables, planes)
     per_table = multiprobe_buckets(query_vec, tables, planes)
-    probe_dirs = [
-        d
-        for tbl, buckets in enumerate(per_table)
-        for bucket in buckets
-        if os.path.isdir(d := os.path.join(path, f"lsh_table={tbl}", f"bucket={bucket}"))
-    ]
-    if not probe_dirs:
-        empty = spark.read.parquet(path).limit(0)
-        return empty.withColumn("cosine", F.lit(0.0)).limit(0)
-    idx = spark.read.option("basePath", path).parquet(*probe_dirs)
-    cond = " OR ".join(
-        "(lsh_table = {} AND bucket IN ({}))".format(
-            tbl, ", ".join(f"'{b}'" for b in buckets)
-        )
-        for tbl, buckets in enumerate(per_table)
-    )
-    candidates = idx.filter(cond)
-    if exclude_ids:
-        candidates = candidates.filter(~F.col("vec_id").isin(list(exclude_ids)))
-    n_probes = tables * (1 + planes)
-    ranked = (
-        candidates.withColumn("cosine", _floor6(cosine_lit("embedding", query_vec)))
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k * n_probes)
-    )
-    return (
-        ranked.dropDuplicates(["vec_id"])
-        .orderBy(F.desc("cosine"), "vec_id")
-        .limit(k)
-    )
+    return _lsh_topk(spark, sf_dir, query_vec, per_table, k, tables, planes, exclude_ids)
 
 
 def _duck_bit_expr(table: int, plane: int, dim: int, col: str) -> str:

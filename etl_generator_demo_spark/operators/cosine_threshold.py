@@ -52,17 +52,11 @@ delegates all execution to a backing RDBMS and has no vector surface
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from etl_generator_demo_spark.catalog import read_parquet_known
 from pyspark.sql import functions as F
 
-from etl_generator_demo_spark.operators.ann_index import (
-    _index_dir,
-    _is_built,
-)
+from etl_generator_demo_spark.operators import index_store
 from etl_generator_demo_spark.operators.relational import t
 from etl_generator_demo_spark.operators.similarity import (
     _as_double,
@@ -118,62 +112,49 @@ def ensure_cosine_ivf_index(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    tag = f"l{n_lists}" + (f"_{variant}" if variant else "")
-    path = _index_dir(sf_dir, "cosivf", tag)
-    cj = os.path.join(path, "_CENTROIDS.json")
-    rj = os.path.join(path, "_RADII.json")
-    if _is_built(path) and os.path.exists(cj) and os.path.exists(rj):
-        with open(cj) as fh:
-            centroids = json.load(fh)
-        with open(rj) as fh:
-            radii = json.load(fh)
-        return path, centroids, radii
+    def build():
+        emb = corpus_fn(spark, sf_dir) if corpus_fn else t(spark, sf_dir, "embeddings")
+        v = _as_double("embedding")
+        nrm = _norm(v)
+        vhat = F.transform(v, lambda x: F.coalesce(F.try_divide(x, nrm), F.lit(0.0)))
+        nemb = emb.withColumn("_vhat", vhat)
+        ml_df = nemb.withColumn("_features", array_to_vector(F.col("_vhat")))
+        model = KMeans(
+            k=n_lists, seed=seed, featuresCol="_features", predictionCol="ivf_list"
+        ).fit(ml_df)
+        assigned = model.transform(ml_df).drop("_features")
+        centroids = [list(map(float, c)) for c in model.clusterCenters()]
 
-    emb = corpus_fn(spark, sf_dir) if corpus_fn else t(spark, sf_dir, "embeddings")
-    v = _as_double("embedding")
-    nrm = _norm(v)
-    vhat = F.transform(v, lambda x: F.coalesce(F.try_divide(x, nrm), F.lit(0.0)))
-    nemb = emb.withColumn("_vhat", vhat)
-    ml_df = nemb.withColumn("_features", array_to_vector(F.col("_vhat")))
-    model = KMeans(
-        k=n_lists, seed=seed, featuresCol="_features", predictionCol="ivf_list"
-    ).fit(ml_df)
-    assigned = model.transform(ml_df).drop("_features")
-    centroids = [list(map(float, c)) for c in model.clusterCenters()]
-
-    cexpr = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in centroids])
-    dist = F.sqrt(
-        F.aggregate(
-            F.zip_with(
-                F.col("_vhat"),
-                F.element_at(cexpr, F.col("ivf_list") + 1),
-                lambda a, b: (a - b) * (a - b),
-            ),
-            F.lit(0.0),
-            lambda s, x: s + x,
+        cexpr = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in centroids])
+        dist = F.sqrt(
+            F.aggregate(
+                F.zip_with(
+                    F.col("_vhat"),
+                    F.element_at(cexpr, F.col("ivf_list") + 1),
+                    lambda a, b: (a - b) * (a - b),
+                ),
+                F.lit(0.0),
+                lambda s, x: s + x,
+            )
         )
-    )
-    radius_rows = (
-        assigned.withColumn("_r", dist)
-        .groupBy("ivf_list")
-        .agg(F.max("_r").alias("r"))
-        .collect()  # bounded: n_lists rows — model state, not data
-    )
-    by_list = {int(r["ivf_list"]): float(r["r"]) for r in radius_rows}
-    radii = [by_list.get(i, EMPTY_LIST_RADIUS) for i in range(n_lists)]
+        radius_rows = (
+            assigned.withColumn("_r", dist)
+            .groupBy("ivf_list")
+            .agg(F.max("_r").alias("r"))
+            .collect()  # bounded: n_lists rows — model state, not data
+        )
+        by_list = {int(r["ivf_list"]): float(r["r"]) for r in radius_rows}
+        radii = [by_list.get(i, EMPTY_LIST_RADIUS) for i in range(n_lists)]
+        return assigned.drop("_vhat").repartition("ivf_list"), centroids, radii
 
-    (
-        assigned.drop("_vhat")
-        .repartition("ivf_list")
-        .write.mode("overwrite")
-        .partitionBy("ivf_list")
-        .parquet(path)
+    tag = f"l{n_lists}" + (f"_{variant}" if variant else "")
+    return index_store.ensure(
+        spark,
+        index_store.index_path(sf_dir, f"cosivf_{tag}"),
+        build,
+        partition_by=("ivf_list",),
+        sidecars=("_CENTROIDS.json", "_RADII.json"),
     )
-    with open(cj, "w") as fh:
-        json.dump(centroids, fh)
-    with open(rj, "w") as fh:
-        json.dump(radii, fh)
-    return path, centroids, radii
 
 
 def qualify_lists_driver_side(

@@ -32,17 +32,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_generator_demo_spark.catalog import read_parquet_known
+from etl_generator_demo_spark.operators.index_store import served
 from etl_generator_demo_spark.operators.relational import t
 from etl_generator_demo_spark.registry import register
-
-from etl_generator_demo_spark.operators._fallback import (
-    check_forced as _check_forced,
-)
-from etl_generator_demo_spark.operators._fallback import (
-    warn_fallback_once as _warn_fallback_once,
-)
-
-_log = __import__("logging").getLogger(__name__)
 
 SHINGLE_N = 5
 NUM_HASHES = 8
@@ -200,20 +192,19 @@ def corpus_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Falls back to the inline pipeline when the cache root is
     unavailable. Same md5 family either way — hash-exact vs the
     DuckDB oracles."""
-    try:
-        _check_forced("corpus_candidate_pairs")
-        from etl_generator_demo_spark.operators.dedup_incremental import (
-            ensure_full_band_index,
-        )
+    from etl_generator_demo_spark.operators import dedup_incremental as di
 
-        keyed = read_parquet_known(spark, ensure_full_band_index(spark, sf_dir))
-        return pairs_from_banded(keyed)
-    except Exception as exc:
-        _warn_fallback_once("corpus_candidate_pairs", exc)
-        docs = t(spark, sf_dir, "documents")
-        return lsh_candidate_pairs(
-            minhash_signatures(doc_shingles(docs, distinct=False))
-        )
+    return served(
+        "corpus_candidate_pairs",
+        lambda: pairs_from_banded(
+            read_parquet_known(spark, di.ensure_full_band_index(spark, sf_dir))
+        ),
+        lambda: lsh_candidate_pairs(
+            minhash_signatures(
+                doc_shingles(t(spark, sf_dir, "documents"), distinct=False)
+            )
+        ),
+    )
 
 
 def corpus_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -227,20 +218,13 @@ def corpus_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning). Falls back to the inline pipeline when the cache
     root is unavailable. Same md5 family either way — hash-exact vs
     the DuckDB oracles."""
-    try:
-        _check_forced("corpus_bands")
-        from etl_generator_demo_spark.operators.dedup_incremental import (
-            ensure_full_band_index,
-        )
+    from etl_generator_demo_spark.operators import dedup_incremental as di
 
-        return read_parquet_known(spark, ensure_full_band_index(spark, sf_dir))
-    except Exception as exc:
-        _warn_fallback_once("corpus_bands", exc)
-        from etl_generator_demo_spark.operators.dedup_incremental import (
-            document_bands,
-        )
-
-        return document_bands(t(spark, sf_dir, "documents"))
+    return served(
+        "corpus_bands",
+        lambda: read_parquet_known(spark, di.ensure_full_band_index(spark, sf_dir)),
+        lambda: di.document_bands(t(spark, sf_dir, "documents")),
+    )
 
 
 def corpus_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -254,16 +238,13 @@ def corpus_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream results stay hash-exact vs the DuckDB oracles. The
     MinHash path keeps its own ``distinct=False`` pipeline inside the
     band index (min() is duplicate-invariant; see `banded_keys`)."""
-    try:
-        _check_forced("corpus_shingles")
-        from etl_generator_demo_spark.operators.dedup_incremental import (
-            ensure_shingle_index,
-        )
+    from etl_generator_demo_spark.operators import dedup_incremental as di
 
-        return read_parquet_known(spark, ensure_shingle_index(spark, sf_dir))
-    except Exception as exc:
-        _warn_fallback_once("corpus_shingles", exc)
-        return doc_shingles(t(spark, sf_dir, "documents"))
+    return served(
+        "corpus_shingles",
+        lambda: read_parquet_known(spark, di.ensure_shingle_index(spark, sf_dir)),
+        lambda: doc_shingles(t(spark, sf_dir, "documents")),
+    )
 
 
 def ngram_jaccard_pairs(

@@ -3,8 +3,8 @@ corpus without re-processing the corpus (SURVEY.md §2.12 X2 [EXT]; no
 reference counterpart — the reference has no dedup at all).
 
 The recurring-ingest shape every training-data pipeline needs: the
-corpus's MinHash band index is a *persisted artifact* (built once,
-same cache idiom as ``ann_index.py``); each incoming batch computes
+corpus's MinHash band index is a *persisted artifact* (built once
+through ``index_store.py``, like every ingest-time index); each incoming batch computes
 its own band keys map-side and probes the index with a broadcast join.
 
 Cost model at 100 TB:
@@ -29,11 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from etl_generator_demo_spark.catalog import read_parquet_known
 from pyspark.sql import functions as F
 
-from etl_generator_demo_spark.operators.ann_index import (
-    _corpus_fingerprint,
-    _is_built,
-    INDEX_ROOT,
-)
+from etl_generator_demo_spark.operators import index_store
 from etl_generator_demo_spark.operators.dedup import (
     BANDS,
     banded_keys,
@@ -58,20 +54,25 @@ def document_bands(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
+def _ensure_document_index(spark: SparkSession, sf_dir: str, name: str, build) -> str:
+    return index_store.ensure(
+        spark, index_store.index_path(sf_dir, name, table="documents"), lambda: (build(),)
+    )[0]
+
+
 def ensure_corpus_band_index(spark: SparkSession, sf_dir: str) -> str:
     """Persist the corpus's band index (docs outside the batch split)
     once per fixture; return its path. Warm calls cost one stat."""
-    path = os.path.join(
-        INDEX_ROOT,
-        _corpus_fingerprint(sf_dir, table="documents"),
+    return _ensure_document_index(
+        spark,
+        sf_dir,
         f"bands_m{BATCH_MOD}r{BATCH_REMAINDER}",
+        lambda: document_bands(
+            t(spark, sf_dir, "documents").filter(
+                F.col("doc_id") % BATCH_MOD != BATCH_REMAINDER
+            )
+        ),
     )
-    if not _is_built(path):
-        corpus = t(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % BATCH_MOD != BATCH_REMAINDER
-        )
-        document_bands(corpus).write.mode("overwrite").parquet(path)
-    return path
 
 
 def ensure_full_band_index(spark: SparkSession, sf_dir: str) -> str:
@@ -82,14 +83,9 @@ def ensure_full_band_index(spark: SparkSession, sf_dir: str) -> str:
     of re-running the shingle→minhash→band pipeline per run — same md5
     family as the DuckDB oracles, so served results stay hash-exact.
     Warm calls cost one stat."""
-    path = os.path.join(
-        INDEX_ROOT, _corpus_fingerprint(sf_dir, table="documents"), "bands_full"
+    return _ensure_document_index(
+        spark, sf_dir, "bands_full", lambda: document_bands(t(spark, sf_dir, "documents"))
     )
-    if not _is_built(path):
-        document_bands(t(spark, sf_dir, "documents")).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return path
 
 
 def ensure_shingle_index(spark: SparkSession, sf_dir: str) -> str:
@@ -101,30 +97,25 @@ def ensure_shingle_index(spark: SparkSession, sf_dir: str) -> str:
     winnowing, dup-coverage — becomes a parquet scan at query time.
     Row-identical to ``doc_shingles(documents)`` by construction, so
     served results stay hash-exact against the DuckDB oracles. Warm
-    calls cost one stat."""
-    path = os.path.join(
-        INDEX_ROOT,
-        _corpus_fingerprint(sf_dir, table="documents"),
+    calls cost one stat.
+
+    Inverted-index layout: hash-partition by shingle (all copies of a
+    shingle in one file) and sort within partitions, so parquet
+    dictionary + delta encoding collapse the exploded relation ~3x
+    (unsorted, the store out-weighs the source text and scan I/O eats
+    the saved shingling CPU at the 100x tier). Hash-32, NOT
+    repartitionByRange: a small corpus's range layout collapses to 1-2
+    hot files and AQE then starves the downstream self-joins of scan
+    parallelism; hash keeps a flat file-count floor while preserving
+    per-shingle adjacency."""
+    return _ensure_document_index(
+        spark,
+        sf_dir,
         "shingles_distinct",
+        lambda: doc_shingles(t(spark, sf_dir, "documents"))
+        .repartition(32, "shingle")
+        .sortWithinPartitions("shingle", "doc_id"),
     )
-    if not _is_built(path):
-        # inverted-index layout: hash-partition by shingle (all copies
-        # of a shingle in one file) and sort within partitions, so
-        # parquet dictionary + delta encoding collapse the exploded
-        # relation ~3x (unsorted, the store out-weighs the source text
-        # and scan I/O eats the saved shingling CPU at the 100x tier).
-        # Hash-32, NOT repartitionByRange: a small corpus's range
-        # layout collapses to 1-2 hot files and AQE then starves the
-        # downstream self-joins of scan parallelism; hash keeps a flat
-        # file-count floor while preserving per-shingle adjacency.
-        (
-            doc_shingles(t(spark, sf_dir, "documents"))
-            .repartition(32, "shingle")
-            .sortWithinPartitions("shingle", "doc_id")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-    return path
 
 
 def incremental_dedup(

@@ -474,18 +474,21 @@ def _bucket_assignments(spark: SparkSession, sf_dir: str, emb: DataFrame) -> Dat
     Falls back to the in-plan Arrow matmul when the index can't be
     built (e.g. an unwritable cache root) — same assignments, computed
     inline."""
-    try:
-        from etl_generator_demo_spark.operators._fallback import check_forced
+    from etl_generator_demo_spark.operators import ann_index
+    from etl_generator_demo_spark.operators.index_store import served
 
-        check_forced("similarity._bucket_assignments")
-        from etl_generator_demo_spark.operators.ann_index import ensure_lsh_index
+    return served(
+        "similarity._bucket_assignments",
+        lambda: read_parquet_known(
+            spark, ann_index.ensure_lsh_index(spark, sf_dir, NEARDUP_TABLES, NEARDUP_PLANES)
+        ).select("vec_id", "lsh_table", "bucket"),
+        lambda: _inline_bucket_assignments(emb),
+    )
 
-        path = ensure_lsh_index(spark, sf_dir, NEARDUP_TABLES, NEARDUP_PLANES)
-        return read_parquet_known(spark, path).select("vec_id", "lsh_table", "bucket")
-    except Exception as exc:
-        from etl_generator_demo_spark.operators._fallback import warn_fallback_once
 
-        warn_fallback_once("similarity._bucket_assignments", exc)
+def _inline_bucket_assignments(emb: DataFrame) -> DataFrame:
+    """The in-plan Arrow matmul that ``_bucket_assignments`` falls back
+    to, with the bucket id packed into one int per table."""
     # closure-captured plain data: executor workers can't import this
     # package, so the UDF must carry its constants by value
     plane_rows = [

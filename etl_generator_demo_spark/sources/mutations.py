@@ -140,9 +140,11 @@ def publish(
     df,
     audits: "list[tuple[str, callable]]" = (),
     sidecars: dict | None = None,
+    partition_by: tuple[str, ...] = (),
 ) -> int:
     """The one whole-table stage-and-swap. Writes ``df`` to a staging
-    sibling of ``path``, counts the staged rows, runs each audit
+    sibling of ``path`` (partitioned by ``partition_by`` when given,
+    the persisted indexes' layouts), counts the staged rows, runs each audit
     (``(name, fn)``; a truthy ``fn(staged)`` is the error, raised as
     :class:`AuditFailure`), writes each ``sidecars`` entry (file name →
     JSON value) into staging, then parks the live table at
@@ -159,7 +161,10 @@ def publish(
     parent = os.path.dirname(os.path.abspath(path))
     staging = tempfile.mkdtemp(prefix=".staging_", dir=parent)
     try:
-        df.write.mode("overwrite").parquet(staging)
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(staging)
         staged = spark.read.parquet(staging)
         n = staged.count()
         for name, audit in audits:

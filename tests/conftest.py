@@ -53,3 +53,16 @@ def catalog(spark, sf_dir):
     cat = Catalog(spark, sf_dir)
     cat.register_views()
     return cat
+
+
+@pytest.fixture
+def tmp_index_root(tmp_path, monkeypatch) -> str:
+    """Point the persisted-index store at this test's ``tmp_path``.
+    For tests that index a temporary fixture: its index is keyed by
+    the fixture's path, so in the shared cache it would outlive the
+    test as an orphan directory."""
+    from etl_generator_demo_spark.operators import index_store
+
+    root = str(tmp_path / ".index_cache")
+    monkeypatch.setattr(index_store, "INDEX_ROOT", root)
+    return root

@@ -66,7 +66,7 @@ def _brute_pairs(spark, path, queries, tau_e6, exclude_ids=()):
 
 
 @pytest.mark.slow
-def test_exactness_on_clustered_corpus_list_path(spark, tmp_path):
+def test_exactness_on_clustered_corpus_list_path(spark, tmp_path, tmp_index_root):
     """List-queries (static pruning) path returns exactly the brute
     hit set on a clustered corpus where pruning fires."""
     from etl_generator_demo_spark.operators.cosine_threshold import (
@@ -105,7 +105,7 @@ def test_exactness_on_clustered_corpus_list_path(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_exactness_dataframe_path_matches_list_path(spark, tmp_path):
+def test_exactness_dataframe_path_matches_list_path(spark, tmp_path, tmp_index_root):
     """DataFrame-queries (DPP) path and list-queries (static) path
     return identical pair sets — and both equal brute force."""
     from etl_generator_demo_spark.operators.cosine_threshold import (
@@ -140,7 +140,7 @@ def test_exactness_dataframe_path_matches_list_path(spark, tmp_path):
     assert len(brute) >= 8
 
 
-def test_radii_cover_every_member(spark, tmp_path):
+def test_radii_cover_every_member(spark, tmp_path, tmp_index_root):
     """Index invariant the exactness proof rests on: every vector's
     normalized distance to its list centroid is <= the stored radius."""
     from etl_generator_demo_spark.operators.cosine_threshold import (
@@ -160,7 +160,7 @@ def test_radii_cover_every_member(spark, tmp_path):
         assert d <= radii[r["ivf_list"]] + 1e-12
 
 
-def test_zero_norm_vectors_never_hit(spark, tmp_path):
+def test_zero_norm_vectors_never_hit(spark, tmp_path, tmp_index_root):
     """A zero vector in the corpus (NULL cosine under try_divide) is
     dropped by the hit filter, exactly as the brute tier drops it."""
     from etl_generator_demo_spark.operators.cosine_threshold import (
@@ -175,7 +175,7 @@ def test_zero_norm_vectors_never_hit(spark, tmp_path):
     assert all(r["vec_id"] != 999 for r in got.collect())
 
 
-def test_empty_qualification_returns_empty(spark, tmp_path):
+def test_empty_qualification_returns_empty(spark, tmp_path, tmp_index_root):
     """A query orthogonal to every cluster at an unreachable tau
     qualifies no list on a tight corpus — static path must return an
     empty (not failing) relation."""
@@ -193,7 +193,7 @@ def test_empty_qualification_returns_empty(spark, tmp_path):
     assert got == []
 
 
-def test_static_path_plan_has_literal_partition_filter(spark, tmp_path):
+def test_static_path_plan_has_literal_partition_filter(spark, tmp_path, tmp_index_root):
     """The list-queries path prunes with a LITERAL ivf_list IN (...)
     partition filter (no corpus-wide scan, no DPP dependency)."""
     from etl_generator_demo_spark.operators.cosine_threshold import (
@@ -213,7 +213,7 @@ def test_static_path_plan_has_literal_partition_filter(spark, tmp_path):
     assert "ivf_list" in plan.split("PartitionFilters", 1)[1][:400]
 
 
-def test_indexed_decontam_matches_brute_on_planted_corpus(spark, tmp_path):
+def test_indexed_decontam_matches_brute_on_planted_corpus(spark, tmp_path, tmp_index_root):
     """End-to-end: the indexed decontam rollup equals the brute audit
     tier row-for-row on a planted corpus with hits."""
     from etl_generator_demo_spark.operators.cosine_threshold import (
@@ -238,7 +238,7 @@ def test_indexed_decontam_matches_brute_on_planted_corpus(spark, tmp_path):
     assert len(idx) >= 5
 
 
-def test_recall_row_is_one(spark, tmp_path):
+def test_recall_row_is_one(spark, tmp_path, tmp_index_root):
     from etl_generator_demo_spark.operators.cosine_threshold import (
         x3_semantic_decontam_recall,
     )
@@ -255,7 +255,7 @@ def test_recall_row_is_one(spark, tmp_path):
     assert row["recall_e6"] == 1_000_000
 
 
-def test_exact_topk_indexed_matches_brute_and_prunes(spark, tmp_path):
+def test_exact_topk_indexed_matches_brute_and_prunes(spark, tmp_path, tmp_index_root):
     """Two-phase ball-bound top-k: bitwise brute-force answer on a
     clustered corpus, AND phase 2 provably skips lists there (the
     kth-score cap from the query's own cluster excludes the far
@@ -294,7 +294,7 @@ def test_exact_topk_indexed_matches_brute_and_prunes(spark, tmp_path):
     assert (bounds < s - 1e-6).any()
 
 
-def test_exact_topk_indexed_small_head_falls_back_exact(spark, tmp_path):
+def test_exact_topk_indexed_small_head_falls_back_exact(spark, tmp_path, tmp_index_root):
     """k larger than the nearest list: phase 1 underfills, s drops to
     -1, phase 2 scans all qualified lists — still the exact answer."""
     from etl_generator_demo_spark.operators.cosine_threshold import (
@@ -319,7 +319,7 @@ def test_exact_topk_indexed_small_head_falls_back_exact(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_randomized_differential_exactness(spark, tmp_path):
+def test_randomized_differential_exactness(spark, tmp_path, tmp_index_root):
     """Seeded randomized differential: across random corpora (mixed
     cluster tightness, duplicate vectors, negative components, a zero
     vector, varying n_lists) and multiple taus, the ball-bound join's

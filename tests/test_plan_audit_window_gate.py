@@ -166,14 +166,14 @@ def test_forced_fallback_env_raises_and_counts(monkeypatch):
     whose plan it was building."""
     import pytest
 
-    from etl_generator_demo_spark.operators import _fallback
+    from etl_generator_demo_spark.operators import index_store
 
     monkeypatch.delenv("SPARK_GRAFT_FORCE_FALLBACK", raising=False)
-    _fallback.check_forced("site")  # no-op when unset
+    index_store.check_forced("site")  # no-op when unset
     monkeypatch.setenv("SPARK_GRAFT_FORCE_FALLBACK", "1")
-    with pytest.raises(_fallback.FallbackForced):
-        _fallback.check_forced("site")
-    n0 = _fallback.events()
-    _fallback.warn_fallback_once("test.site", RuntimeError("x"))
-    _fallback.warn_fallback_once("test.site", RuntimeError("x"))
-    assert _fallback.events() == n0 + 2  # every occurrence, not just first
+    with pytest.raises(index_store.FallbackForced):
+        index_store.check_forced("site")
+    n0 = index_store.events()
+    index_store.warn_fallback_once("test.site", RuntimeError("x"))
+    index_store.warn_fallback_once("test.site", RuntimeError("x"))
+    assert index_store.events() == n0 + 2  # every occurrence, not just first

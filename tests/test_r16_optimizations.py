@@ -44,7 +44,7 @@ def test_rematerialize_fully_removed_doc_is_null(spark, tmp_path):
     assert rows[2]["kept_text"] == "u1 u2 u3" and rows[2]["n_kept_tokens"] == 3
 
 
-def test_jaccard_sweep_single_pass_matches_brute_recount(spark, tmp_path):
+def test_jaccard_sweep_single_pass_matches_brute_recount(spark, tmp_path, tmp_index_root):
     """The conditional-aggregation sweep (r16: one flag projection, two
     aggregates) must equal the per-threshold recount it replaced —
     including a threshold bucket with ZERO qualifying pairs (the

@@ -52,7 +52,7 @@ def test_semantic_decontam_flags_planted_axis_match(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_decontam_funnel_is_monotone_and_tier_attributed(spark, tmp_path):
+def test_decontam_funnel_is_monotone_and_tier_attributed(spark, tmp_path, tmp_index_root):
     """Plant one contaminated doc per tier against eval doc 7:
     - doc 1: verbatim copy of the eval text  -> dies at the EXACT gate
       (and would die at fuzzy too; exact removes it first);
@@ -111,7 +111,7 @@ def test_decontam_funnel_is_monotone_and_tier_attributed(spark, tmp_path):
 
 
 @pytest.mark.slow
-def test_tier_overlap_cells_partition_the_flagged_set(spark, tmp_path):
+def test_tier_overlap_cells_partition_the_flagged_set(spark, tmp_path, tmp_index_root):
     """Same plant as the funnel: doc 1 is exact+fuzzy flagged (verbatim
     copy hits both gates — they share all shingles), doc 3 is
     semantic-only. Expected cells: (T,T,F)=1 and (F,F,T)=1."""

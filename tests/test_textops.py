@@ -143,7 +143,7 @@ class TestRepetitionScores:
 
 
 class TestDecontaminate:
-    def test_planted_overlap_flagged_and_broadcast(self, spark, tmp_path):
+    def test_planted_overlap_flagged_and_broadcast(self, spark, tmp_path, tmp_index_root):
         """A corpus doc copying a 5-token span from a benchmark doc is
         flagged with the exact distinct-shingle overlap count; disjoint
         docs stay clean; the benchmark shingle set is broadcast."""

@@ -26,14 +26,14 @@ EXPECTATIONS: dict[str, dict] = {
     # Cache-state-aware budgets (round 16, VERDICT r15 item 2): a
     # query served from a persisted index (shingle store / band index
     # / LSH bucket index) has FEWER shuffles warm than when the
-    # ``operators/_fallback`` inline pipeline fires (index
+    # ``operators/index_store.served`` inline pipeline fires (index
     # unavailable or mid-rebuild — the state that produced the r5 and
     # r15 WARNs under contention). Entries may carry
     # ``max_exchanges_cold`` / ``min_broadcast_cold`` for the inline
     # state; the audit detects which state each plan was actually
     # built in (fallback-event diff), applies that state's budget, and
-    # prints the state. ``--cold`` forces the inline state for all
-    # three fallback sites so the cold budgets are auditable
+    # prints the state. ``--cold`` forces the inline state for every
+    # fallback site so the cold budgets are auditable
     # deterministically.
     "q1_pricing_summary": {"max_exchanges": 2, "pushed": True},
     "q2_revenue_by_segment": {"max_exchanges": 4, "min_broadcast": 1},
@@ -1302,7 +1302,7 @@ def main() -> int:
     if args.cold:
         os.environ["SPARK_GRAFT_FORCE_FALLBACK"] = "1"
 
-    from etl_generator_demo_spark.operators import _fallback
+    from etl_generator_demo_spark.operators import index_store
     from etl_generator_demo_spark.registry import load_all
     from etl_generator_demo_spark.session import get_spark
 
@@ -1316,7 +1316,7 @@ def main() -> int:
         return 2
     bad = 0
     for name in names:
-        ev0 = _fallback.events()
+        ev0 = index_store.events()
         df = registry[name].fn(spark, args.sf)
         df.collect()  # AQE finalizes (and codegen-wraps) the plan only on execution
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -1325,7 +1325,7 @@ def main() -> int:
         plan = plan.split("== Initial Plan ==")[0]
         # a fallback event during THIS query's build/run means its plan
         # is the inline (cold) shape — audit it against the cold budget
-        cold = args.cold or _fallback.events() > ev0
+        cold = args.cold or index_store.events() > ev0
         problems = audit(name, plan, EXPECTATIONS.get(name, {}), cold=cold)
         n_ex = len(re.findall(r"Exchange (?:hash|range|SinglePartition)", plan))
         codegen_stages = len(set(re.findall(r"\*\((\d+)\)", plan)))
