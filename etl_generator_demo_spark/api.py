@@ -154,12 +154,15 @@ def generate_sql_endpoint(state: AppState, body: dict[str, Any]) -> dict[str, An
 def execute_endpoint(state: AppState, body: dict[str, Any]) -> dict[str, Any]:
     """POST /api/db/execute. Body: {sql, limit=10}. limit=0 is an
     explicit "no auto-limit" request (the engine supports it), so the
-    parse must not treat 0 as absent; a non-numeric limit is a client
-    error envelope, not a 500."""
+    parse must not treat 0 as absent; a non-numeric or negative limit
+    is a client error envelope, not a 500 (a negative one would skip
+    the cap and collect the whole result)."""
     sql = body.get("sql") or ""
     raw_limit = body.get("limit")
     try:
         limit = DEFAULT_LIMIT if raw_limit is None else int(raw_limit)
+        if limit < 0:
+            raise ValueError(raw_limit)
     except (TypeError, ValueError):
         return {
             "success": False,

@@ -11,14 +11,24 @@ plan lazily — nothing executes until collect), the LIMIT decision is
 plan-aware, the safety gate is structural, and collection happens only
 at the serialization edge under an enforced limit — the one place a
 100 TB engine is allowed to ``collect()``.
+
+A repeated read is served from a bounded result cache instead of
+running Spark again (see :class:`ResultCache`). The lookup comes after
+the gate, the analysis and the auto-LIMIT, so only the Spark job and
+the collect are skipped.
 """
 
 from __future__ import annotations
 
+import copy
 import datetime as _dt
 import decimal as _decimal
+import os
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from typing import Any
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -28,6 +38,19 @@ from etl_generator_demo_spark.plans.safety import SafetyVerdict, validate_sql_sa
 #: API default result limit (reference ``main.py:65``); UI uses 50
 #: (``static/js/app.js:495``).
 DEFAULT_LIMIT = 10
+
+#: Rows the result cache of one engine holds over all its entries, least
+#: recently used evicted first; a result of more than a tenth of this is
+#: not cached.
+RESULT_CACHE_ROWS = 20_000
+#: What an entry counts at least, in rows: it also holds its plan.
+_MIN_ENTRY_ROWS = 8
+#: Leaves whose output is fixed by the plan itself or by the stamps of
+#: the files it lists. ``CTERelationRef`` reads a CTE definition, which
+#: is a child of the same plan.
+_CACHEABLE_LEAVES = frozenset(
+    {"LogicalRelation", "LocalRelation", "OneRowRelation", "Range", "CTERelationRef"}
+)
 
 
 def scalarize(value: Any) -> Any:
@@ -73,6 +96,122 @@ class ExecutionResult:
         return out
 
 
+def _result(columns: tuple[str, ...], values) -> ExecutionResult:
+    rows = [dict(zip(columns, v)) for v in values]
+    return ExecutionResult(success=True, columns=list(columns), rows=rows, row_count=len(rows))
+
+
+@dataclass(frozen=True)
+class _Entry:
+    plan: Any  # the canonical analyzed plan (a JVM object, never a DataFrame)
+    stamps: tuple
+    columns: tuple[str, ...]
+    values: tuple[tuple, ...]  # scalarized rows, in column order
+    nested: bool  # some value is a list or dict: hand out deep copies
+
+    @property
+    def size(self) -> int:
+        return max(len(self.values), _MIN_ENTRY_ROWS)
+
+    def result(self) -> ExecutionResult:
+        return _result(self.columns, copy.deepcopy(self.values) if self.nested else self.values)
+
+
+class ResultCache:
+    """Results of reads, keyed on ``(statement, limit)`` and served only
+    while the request's canonical analyzed plan equals the cached one
+    (so a view re-registered with another filter, a changed session
+    time zone or ANSI mode is a miss), its column names are the cached
+    ones, and every input file's stamp still matches (so a MERGE, a
+    publish or an in-place rewrite is a miss). Bounded by
+    :data:`RESULT_CACHE_ROWS`; safe for concurrent callers, who never
+    share a returned container."""
+
+    def __init__(self):
+        self._entries: OrderedDict[tuple, _Entry] = OrderedDict()
+        self._rows = 0
+        self._lock = threading.Lock()
+        self._jvm_refs = None  # JVM objects the checks use, looked up once
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def stamps(self, plan, jvm) -> tuple | None:
+        """``(path, inode, mtime_ns, size)`` of every file a canonical
+        analyzed plan reads, or None when its result may change while
+        those files do not: a nondeterministic expression or a
+        ``now()``-like one anywhere (subqueries included), a leaf that
+        is not file-backed, inline or generated (JDBC, RDDs, cached
+        relations, commands), or an input that is not a local file
+        that stats."""
+        if self._jvm_refs is None:
+            self._jvm_refs = (
+                jvm.org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE(),
+                jvm.java.lang.Class.forName(
+                    "org.apache.spark.sql.execution.datasources.HadoopFsRelation"),
+                jvm.scala.collection.immutable.ArraySeq,
+            )
+        current_like, fs_relation, array_seq = self._jvm_refs
+        if not plan.deterministic() or plan.containsPattern(current_like):
+            return None
+        subqueries = plan.subqueriesAll()
+        files: set[str] = set()
+        for p in [plan] + [subqueries.apply(i) for i in range(subqueries.size())]:
+            leaves = p.collectLeaves()
+            for i in range(leaves.size()):
+                leaf = leaves.apply(i)
+                name = leaf.nodeName()
+                if name not in _CACHEABLE_LEAVES:
+                    return None
+                if name == "LogicalRelation":
+                    relation = leaf.relation()
+                    if not fs_relation.isInstance(relation):
+                        return None
+                    # a few round trips per table, not one per file
+                    joined = array_seq.unsafeWrapArray(relation.inputFiles()).mkString("\n")
+                    files.update(joined.split("\n") if joined else ())
+        stamps = []
+        for uri in sorted(files):
+            parsed = urlparse(uri)
+            if parsed.scheme not in ("", "file"):
+                return None
+            path = unquote(parsed.path)
+            try:
+                st = os.stat(path)
+            except OSError:
+                return None
+            stamps.append((path, st.st_ino, st.st_mtime_ns, st.st_size))
+        return tuple(stamps)
+
+    def get(
+        self, key: tuple, plan, stamps: tuple, columns: tuple[str, ...]
+    ) -> ExecutionResult | None:
+        """The cached result of ``key`` if its stamps, its column names
+        and its plan all still match the request's. Canonicalization
+        erases names, so a view re-registered over the same files with
+        a column renamed has an equal plan: the names are compared
+        apart."""
+        with self._lock:
+            entry = self._entries.get(key)
+        if (entry is None or entry.stamps != stamps or entry.columns != columns
+                or not entry.plan.equals(plan)):
+            return None
+        with self._lock:
+            if self._entries.get(key) is entry:
+                self._entries.move_to_end(key)
+        return entry.result()
+
+    def put(self, key: tuple, entry: _Entry) -> None:
+        if len(entry.values) > RESULT_CACHE_ROWS // 10:
+            return
+        with self._lock:
+            old = self._entries.pop(key, None)
+            self._rows += entry.size - (old.size if old else 0)
+            self._entries[key] = entry
+            while self._rows > RESULT_CACHE_ROWS:
+                self._rows -= self._entries.popitem(last=False)[1].size
+
+
 class BlockedStatementError(RuntimeError):
     """Raised by ``ExecutionEngine.dataframe`` when the safety gate
     rejects a statement (``execute`` returns the blocked envelope
@@ -93,6 +232,7 @@ class ExecutionEngine:
         self.spark = spark
         self.allow_writes = allow_writes
         self.catalog = catalog
+        self._results = ResultCache()
 
     def _admit(self, sql: str) -> tuple[str, SafetyVerdict]:
         """Strip the statement and run the safety gate on it; a blocked
@@ -121,7 +261,9 @@ class ExecutionEngine:
         return self._plan(*self._admit(sql), limit)
 
     def execute(self, sql: str, limit: int | None = DEFAULT_LIMIT) -> ExecutionResult:
-        """Run a statement and serialize rows, reference-E2 style."""
+        """Run a statement and serialize rows, reference-E2 style. A read
+        the result cache can vouch for skips the Spark job and the
+        collect; everything before them runs on every request."""
         try:
             sql, verdict = self._admit(sql)
         except BlockedStatementError as exc:
@@ -130,16 +272,30 @@ class ExecutionEngine:
             )
         if verdict.is_write and verdict.keyword == "MERGE":
             return self._execute_merge(sql)
+        key = (sql, limit if limit and limit > 0 else 0)
         try:
             df = self._plan(sql, verdict, limit)
+            columns = tuple(df.columns)
+            stamps = None
+            if not verdict.is_write:
+                plan = df._jdf.queryExecution().analyzed().canonicalized()
+                # stamped BEFORE the collect: a file rewritten meanwhile
+                # leaves a stale stamp, which can only miss
+                stamps = self._results.stamps(plan, self.spark._jvm)
+            if stamps is not None:
+                hit = self._results.get(key, plan, stamps, columns)
+                if hit is not None:
+                    return hit
             collected = df.collect()
         except Exception as exc:  # parse/analysis/runtime errors -> error envelope
             return ExecutionResult(success=False, error=str(exc)[:2000])
-        columns = list(df.columns)
-        rows = [{c: scalarize(v) for c, v in row.asDict().items()} for row in collected]
-        return ExecutionResult(
-            success=True, columns=columns, rows=rows, row_count=len(rows)
-        )
+        values = tuple(tuple(scalarize(v) for v in row) for row in collected)
+        if stamps is None:
+            return _result(columns, values)
+        entry = _Entry(plan, stamps, columns, values,
+                       nested=any(isinstance(x, (list, dict)) for v in values for x in v))
+        self._results.put(key, entry)
+        return entry.result()
 
     def _execute_merge(self, sql: str) -> ExecutionResult:
         """Route star-form ``MERGE INTO`` to the parquet upsert
@@ -148,8 +304,6 @@ class ExecutionEngine:
         Returns the affected rowcount like the reference's non-SELECT
         branch (``db_connector.py:244-251``); the single summary row
         breaks out updated vs inserted."""
-        import os
-
         from etl_generator_demo_spark.plans.merge import UnsupportedMergeError, parse_merge
         from etl_generator_demo_spark.sources.mutations import merge_parquet, recover_staged
 

@@ -21,10 +21,15 @@ def plan_has_limit(df: DataFrame) -> bool:
     subquery, not the statement's result — ``SELECT * FROM (SELECT ...
     LIMIT 1000000) x`` must still be capped at the serialization edge,
     or the one sanctioned collect() materializes a million rows on the
-    driver (a substring/anywhere check had exactly that hole)."""
-    plan = df._jdf.queryExecution().analyzed().toString()
-    root = plan.splitlines()[0].lstrip("'") if plan else ""
-    return root.startswith("GlobalLimit") or root.startswith("CollectLimit")
+    driver (a substring/anywhere check had exactly that hole). A
+    ``WITH`` statement's root is ``WithCTE``; its main query decides,
+    so a LIMIT inside a CTE body alone is still capped."""
+    plan = df._jdf.queryExecution().analyzed()
+    name = plan.nodeName()
+    while name == "WithCTE":
+        plan = plan.plan()
+        name = plan.nodeName()
+    return name == "GlobalLimit"
 
 
 def apply_auto_limit(df: DataFrame, limit: int) -> DataFrame:

@@ -45,6 +45,23 @@ class TestAutoLimit:
         df = spark.sql("SELECT o_orderkey FROM orders LIMIT 50")
         assert plan_has_limit(df)
 
+    def test_cte_explicit_limit_respected(self, engine):
+        # the analyzed root of a WITH statement is WithCTE; its main
+        # query's LIMIT is the statement's
+        res = engine.execute(
+            "WITH x AS (SELECT * FROM orders) "
+            "SELECT o_orderkey FROM x ORDER BY o_orderkey LIMIT 100",
+            limit=10,
+        )
+        assert res.success and res.row_count == 100
+
+    def test_limit_inside_cte_body_still_capped(self, engine):
+        res = engine.execute(
+            "WITH x AS (SELECT * FROM orders LIMIT 100) SELECT o_orderkey FROM x",
+            limit=10,
+        )
+        assert res.success and res.row_count == 10
+
     def test_limit_none_means_unlimited(self, engine):
         res = engine.execute("SELECT o_orderkey FROM orders", limit=None)
         assert res.success and res.row_count == 1500

@@ -125,6 +125,38 @@ class TestExecuteContract:
         assert out["success"] is False and out["is_blocked"] is True
 
 
+    def test_negative_limit_is_a_client_error(self, state):
+        from etl_generator_demo_spark.api import execute_endpoint
+
+        out = execute_endpoint(state, {"sql": "SELECT * FROM lineitem", "limit": -1})
+        assert out == {"success": False, "error": "invalid limit: -1", "status_code": 400}
+        # 0 keeps its meaning: no auto-limit
+        out = execute_endpoint(state, {"sql": "SELECT o_orderkey FROM orders", "limit": 0})
+        assert out["success"] and out["row_count"] == 1500
+
+    def test_cached_reply_is_byte_identical_and_unshared(self, state):
+        import json
+
+        from etl_generator_demo_spark.api import execute_endpoint
+
+        body = {
+            "sql": "SELECT o_orderkey, o_orderdate, CAST(o_totalprice AS DECIMAL(12, 2)) AS p, "
+            "array(o_orderkey, o_custkey) AS ks FROM orders ORDER BY o_orderkey",
+            "limit": 5,
+        }
+        miss = execute_endpoint(state, body)
+        wire = json.dumps(miss)
+        hit = execute_endpoint(state, body)
+        assert json.dumps(hit) == wire
+        # a caller mutating its reply must not change the next one
+        for out in (miss, hit):
+            out["rows"][0]["ks"].append(-1)
+            out["rows"][0]["p"] = "0"
+            out["rows"].append({"o_orderkey": -1})
+            out["columns"].append("extra")
+        assert json.dumps(execute_endpoint(state, body)) == wire
+
+
 def test_health_envelope_wire_parity():
     """GET /api/health must serialize exactly like the reference
     (main.py:222-225): {"status": "ok", "service": "ETL SQL Generator"}."""
